@@ -1,4 +1,5 @@
 package graft
+import scala.util.control.NonFatal
 import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -95,7 +96,7 @@ object Bench {
       new BucketedRandomProjectionLSH().setInputCol("features")
         .setOutputCol("h").setBucketLength(0.5).setNumHashTables(2)
         .setSeed(7L).fit(tiny).transform(tiny).count()
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] warmup skipped: ${e.getMessage}")
     }
     // Per-query REPEATS (BASELINE.md v6 methodology): a single timing
@@ -167,7 +168,7 @@ object Bench {
             sampleCounts(name) = 3
             Seq(t1, t2, t3).min
           } else { sampleCounts(name) = 2; math.min(t1, t2) }
-        } catch { case e: Throwable =>
+        } catch { case NonFatal(e) =>
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           failed += name
           0.0
@@ -208,7 +209,7 @@ object Bench {
         java.nio.file.Paths.get("target", "bench_full.json"),
         s"""{"total":${f"$total%.3f"},"queries":$fullQs,"samples":$sampleJs,"failed":$failedJson,"sf":"$sfDir"}"""
           .getBytes("UTF-8"))
-    } catch { case e: Throwable =>
+    } catch { case NonFatal(e) =>
       System.err.println(s"[bench] full-precision dump skipped: ${e.getMessage}")
     }
     // STDOUT BUDGET (round 20): the driver keeps only the LAST 2000 chars

@@ -116,8 +116,8 @@ object EmnistFixture {
       .withColumn("pca", array_to_vector(col("features")))
       .select(col("label_idx"), col("pca"))
       // collapse df()'s 8·scale generation partitions back to 8: the
-      // boosting consumer runs hundreds of tiny treeAggregate jobs over
-      // this frame, and at ~2k rows their cost is TASK COUNT, not data
+      // boosting consumer runs many tiny jobs over this frame, and at
+      // ~2k rows their cost is TASK COUNT, not data
       // (measured: q111 ~8 s at 40 partitions, ~3 s at 8). Fit results
       // are partitioning-independent (content-hashed sampling,
       // full-collect edges at this n), so this is purely a cost knob.

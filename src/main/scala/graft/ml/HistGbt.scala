@@ -1,10 +1,5 @@
 package graft.ml
 
-import java.util.concurrent.Executors
-
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
-
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.ml.linalg.{Vector => MlVector}
 import org.apache.spark.rdd.RDD
@@ -55,17 +50,23 @@ import org.apache.spark.storage.StorageLevel
   * Scale posture (100 TB, `tree_learner='data'` exactly): the binned
   * matrix is built in one distributed pass (bin edges from a bounded
   * per-partition quantile sample — O(sample) driver state, never rows);
-  * each split aggregates ONE histogram array over ONLY the expanding
-  * leaf's rows (rows route through the partial tree, a few byte
-  * compares) via `treeAggregate` — executors hold row slices, node
-  * statistics merge, rows never move. The sibling's histogram is the
-  * parent-minus-child SUBTRACTION (LightGBM's halving trick), so each
-  * split pays one scan, not two. Histogram size is
-  * dims × bins × 3 doubles (64×64×3 ≈ 98 KB here) — broadcast-merge
-  * friendly at any row count. Per boosting round the K class trees fit
-  * concurrently as independent Spark jobs over one shared (binned,
-  * grad, hess) RDD; scores update in one broadcast-trees map stage and
-  * are checkpoint-truncated so lineage stays O(1) in rounds.
+  * each split histograms ONLY the expanding leaf's rows (rows route
+  * through the partial tree, a few byte compares) via `treeAggregate` —
+  * executors hold row slices, node statistics merge, rows never move.
+  * The sibling's histogram is the parent-minus-child SUBTRACTION
+  * (LightGBM's halving trick), so each split pays one scan, not two.
+  * Per boosting round the K class trees grow in LOCKSTEP over one
+  * shared (binned, grad[K], hess[K]) RDD: one job gathers every tree's
+  * root totals and histogram, then each step is one job that routes
+  * every row through all K partial trees and histograms each growing
+  * tree's expanding leaf, while the driver advances each tree's
+  * leaf-wise frontier on its own. A round costs 1 + (scans per tree)
+  * jobs — 4 at maxLeaves 8 / maxDepth 3 — instead of ~K × that
+  * (MLlib*, ICDE'19: more work per communication round). A task's step
+  * accumulator is K × (dims × bins × 3 + 3) doubles (≈1.9 MB at 39 ×
+  * 64 × 32), split into extra jobs past a fixed byte cap. Scores
+  * update in one broadcast-trees map stage and are
+  * checkpoint-truncated so lineage stays O(1) in rounds.
   */
 object HistGbt {
 
@@ -281,19 +282,17 @@ object HistGbt {
     */
   private[ml] def quantileEdges(rows: RDD[MlVector], dims: Int,
       maxBins: Int, sampleTarget: Int): Array[Array[Double]] =
-    edgesFromSample(boundedSample(rows, sampleTarget), dims, maxBins)
+    edgesFromSample(boundedSample(rows, rows.count(), sampleTarget), dims,
+      maxBins)
 
   /** The bounded deterministic sample behind [[quantileEdges]] — shared
     * with the EFB conflict graph so bin mapper and bundling see the
-    * same rows (one collect, not two).
+    * same rows (one collect, not two). `n` is the row count of `rows`,
+    * which the caller has cached.
     */
-  private[ml] def boundedSample(rows: RDD[MlVector],
+  private[ml] def boundedSample(rows: RDD[MlVector], n: Long,
       sampleTarget: Int): Array[MlVector] = {
-    val n = rows.sparkContext.longAccumulator
-    val frac = {
-      rows.foreach(_ => n.add(1L)) // count; rows is cached by caller
-      math.min(1.0, sampleTarget.toDouble / math.max(1L, n.value))
-    }
+    val frac = math.min(1.0, sampleTarget.toDouble / math.max(1L, n))
     // CONTENT-keyed Bernoulli filter (advisor round 13): the previous
     // per-partition-seeded RNG sampled by partition-local row order, so
     // with n > sampleTarget the bin edges — and therefore the whole fit
@@ -371,44 +370,14 @@ object HistGbt {
     }
   }
 
-  /** Histogram of (Σg, Σh, count) per (feature, bin) over the rows that
-    * route to `target` under the partial tree rooted at `root` — one
-    * treeAggregate; only the expanding leaf's rows contribute.
+  /** Byte cap on one task's lockstep-step accumulator. A step's trees
+    * are split into the fewest groups whose (dims × bins × 3 + 3)-double
+    * slots fit under it: every tree of a step shares one job while
+    * that is small (39 classes × 64 dims × 32 bins ≈ 1.9 MB), and a wide
+    * fit (1,024 dims × 256 bins ≈ 6.3 MB per tree) takes a few jobs per
+    * step rather than one ~245 MB accumulator per task.
     */
-  private def leafHistogram(data: RDD[(Array[Byte], Double, Double)],
-      root: BNode, target: BNode, dims: Int, bins: Int): Array[Double] = {
-    // flatten the PARTIAL tree for executor-side routing: node id ==
-    // preorder index; leaves carry their BNode identity via id mapping
-    val (flat, leafIds) = flattenPartial(root)
-    val targetId = leafIds(target)
-    data.treeAggregate(null.asInstanceOf[Array[Double]])(
-      seqOp = (accIn, row) => {
-        val acc = if (accIn == null) new Array[Double](dims * bins * 3) else accIn
-        val (bv, g, h) = row
-        var n = 0
-        while (flat.feature(n) >= 0) {
-          n = if ((bv(flat.feature(n)) & 0xff) <= flat.threshold(n)) flat.left(n)
-              else flat.right(n)
-        }
-        if (n == targetId) {
-          var d = 0
-          while (d < dims) {
-            val base = (d * bins + (bv(d) & 0xff)) * 3
-            acc(base) += g; acc(base + 1) += h; acc(base + 2) += 1.0
-            d += 1
-          }
-        }
-        acc
-      },
-      combOp = (a, b) => {
-        if (a == null) b else if (b == null) a
-        else { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a }
-      },
-      depth = 2) match {
-      case null => new Array[Double](dims * bins * 3) // empty partition set
-      case arr  => arr
-    }
-  }
+  private val StepAccumulatorBytes = 32L << 20
 
   /** Preorder-flatten the partial tree (split nodes + current leaves);
     * leaves get value slots (unused during routing) and a BNode → id
@@ -438,56 +407,184 @@ object HistGbt {
       new Array[Double](feats.length)), leafIds.toMap)
   }
 
-  /** Fit ONE Newton tree to (g, h) with leaf-wise growth. `data` holds
-    * (binnedFeatures, grad, hess) for this class.
+  /** One class tree's leaf-wise growth, resumable across histogram
+    * scans. [[grow]] splits the best-gain frontier leaf next (ties keep
+    * the priority queue's insertion order) until a split's smaller
+    * child needs a scan — the grower then waits with that child
+    * `pending` — or growth stops. Splits whose children would sit at
+    * `maxDepth` need no histogram and go ahead without waiting. Before
+    * the first [[accept]] the pending leaf is the not-yet-built root.
+    * A frontier leaf that may still be scanned-split RETAINS its
+    * histogram so its children's sibling comes by subtraction: the
+    * driver holds ≤ maxLeaves × dims × bins × 3 doubles per tree, for
+    * all K trees of a round at once.
+    */
+  private final class Grower(dims: Int, bins: Int, maxLeaves: Int,
+      maxDepth: Int, lambda: Double, gamma: Double, minChildHess: Double) {
+    var root: BNode = _
+    private var pending: BNode = _ // smaller child awaiting its histogram
+    private var parent: BNode = _  // the split node that produced it
+    private val frontier = scala.collection.mutable.PriorityQueue.empty[BNode](
+      Ordering.by(_.gain))
+    private var leaves = 1
+
+    def needsScan: Boolean = root == null || pending != null
+
+    /** The partial tree to route rows through and the id of the leaf
+      * whose rows the scan histograms.
+      */
+    def scanTarget: (Tree, Int) =
+      if (root == null)
+        (Tree(Array(-1), Array(-1), Array(-1), Array(-1), Array(0.0),
+          Array(0.0)), 0)
+      else {
+        val (flat, leafIds) = flattenPartial(root)
+        (flat, leafIds(pending))
+      }
+
+    /** Take the pending leaf's histogram and its (Σg, Σh, count) — read
+      * only for the root; a child's come from its parent's split — and
+      * grow to the next scan.
+      */
+    def accept(hist: Array[Double], g: Double, h: Double, cnt: Long): Unit = {
+      if (root == null) {
+        root = new BNode(0, g, h, cnt, hist)
+        findBestSplit(root, dims, bins, lambda, gamma, minChildHess)
+        frontier += root
+      } else {
+        // sibling = parent − child (LightGBM's histogram subtraction)
+        val small = pending
+        val large =
+          if (small eq parent.leftChild) parent.rightChild else parent.leftChild
+        small.hist = hist
+        val sib = new Array[Double](parent.hist.length)
+        var i = 0
+        while (i < sib.length) {
+          sib(i) = parent.hist(i) - hist(i); i += 1
+        }
+        large.hist = sib
+        parent.hist = null // consumed
+        val (lc, rc) = (parent.leftChild, parent.rightChild)
+        findBestSplit(lc, dims, bins, lambda, gamma, minChildHess)
+        findBestSplit(rc, dims, bins, lambda, gamma, minChildHess)
+        // a leaf whose children would sit at maxDepth is never a scan
+        // parent, so its histogram is dead once its split is known
+        if (lc.depth + 1 >= maxDepth) { lc.hist = null; rc.hist = null }
+        frontier += lc; frontier += rc
+        pending = null; parent = null
+      }
+      grow()
+    }
+
+    private def grow(): Unit =
+      while (pending == null && leaves < maxLeaves && frontier.nonEmpty &&
+          frontier.head.gain > 0) {
+        val node = frontier.dequeue()
+        val (gl, hl, cl) = node.splitLeft
+        val lc = new BNode(node.depth + 1, gl, hl, cl, null)
+        val rc = new BNode(node.depth + 1, node.g - gl, node.h - hl,
+          node.cnt - cl, null)
+        node.leftChild = lc; node.rightChild = rc
+        leaves += 1
+        if (leaves < maxLeaves && node.depth + 1 < maxDepth) {
+          // ONE scan, for the smaller child
+          pending = if (cl <= node.cnt - cl) lc else rc
+          parent = node
+        } else node.hist = null
+      }
+  }
+
+  /** One lockstep step over `slots` = (class, partial tree, target leaf):
+    * a single treeAggregate routes each row through every slot's tree
+    * and, where it lands on the target leaf, adds it to that slot's
+    * (Σg, Σh, count) per (feature, bin) histogram and to the slot's
+    * three trailing totals. Per slot the rows, their order within a
+    * partition and the merge are those of a lone per-tree scan, so the
+    * sums are bit-identical to fitting the tree alone.
+    */
+  private def scanStep(data: RDD[(Array[Byte], Array[Double], Array[Double])],
+      slots: Seq[(Int, Tree, Int)], dims: Int, bins: Int): Array[Double] = {
+    val width = dims * bins * 3 + 3
+    val cls = slots.map(_._1).toArray
+    val trees = slots.map(_._2).toArray
+    val targets = slots.map(_._3).toArray
+    val size = slots.length * width
+    data.treeAggregate(null.asInstanceOf[Array[Double]])(
+      seqOp = (accIn, row) => {
+        val acc = if (accIn == null) new Array[Double](size) else accIn
+        val (bv, g, h) = row
+        var j = 0
+        while (j < trees.length) {
+          if (trees(j).route(bv) == targets(j)) {
+            val gk = g(cls(j)); val hk = h(cls(j))
+            val off = j * width
+            var d = 0
+            while (d < dims) {
+              val base = off + (d * bins + (bv(d) & 0xff)) * 3
+              acc(base) += gk; acc(base + 1) += hk; acc(base + 2) += 1.0
+              d += 1
+            }
+            val tot = off + width - 3
+            acc(tot) += gk; acc(tot + 1) += hk; acc(tot + 2) += 1.0
+          }
+          j += 1
+        }
+        acc
+      },
+      combOp = (a, b) => {
+        if (a == null) b else if (b == null) a
+        else { var i = 0; while (i < a.length) { a(i) += b(i); i += 1 }; a }
+      },
+      depth = 2) match {
+      case null => new Array[Double](size) // empty partition set
+      case arr  => arr
+    }
+  }
+
+  /** Fit `numTrees` Newton trees in lockstep over one shared
+    * (binnedFeatures, grad[numTrees], hess[numTrees]) RDD, tree k
+    * fitting (grad(k), hess(k)). The first step's job gathers every
+    * tree's root totals and root histogram; each later step is one job
+    * (per [[StepAccumulatorBytes]] group) that histograms the pending
+    * leaf of every tree still growing. Each tree's splits are exactly
+    * those it would make fit alone. `stepBytes` is the per-job cap
+    * (HistGbtSpec lowers it to exercise the grouping).
+    */
+  private[ml] def fitTrees(data: RDD[(Array[Byte], Array[Double], Array[Double])],
+      numTrees: Int, dims: Int, bins: Int, maxLeaves: Int, maxDepth: Int,
+      lambda: Double, gamma: Double, minChildHess: Double,
+      stepBytes: Long = StepAccumulatorBytes): Array[Tree] = {
+    val growers = Array.fill(numTrees)(
+      new Grower(dims, bins, maxLeaves, maxDepth, lambda, gamma, minChildHess))
+    val histLen = dims * bins * 3
+    val width = histLen + 3
+    val perJob = math.max(1L, stepBytes / (8L * width)).toInt
+    var active: Seq[Int] = growers.indices
+    while (active.nonEmpty) {
+      active.grouped(perJob).foreach { group =>
+        val acc = scanStep(data, group.map { k =>
+          val (tree, target) = growers(k).scanTarget
+          (k, tree, target)
+        }, dims, bins)
+        group.zipWithIndex.foreach { case (k, j) =>
+          val off = j * width
+          growers(k).accept(java.util.Arrays.copyOfRange(acc, off, off + histLen),
+            acc(off + histLen), acc(off + histLen + 1), acc(off + histLen + 2).toLong)
+        }
+      }
+      active = active.filter(growers(_).needsScan)
+    }
+    growers.map(g => finalizeTree(g.root, lambda))
+  }
+
+  /** Fit ONE Newton tree to (g, h) with leaf-wise growth — [[fitTrees]]
+    * with a single tree.
     */
   private[ml] def fitTree(data: RDD[(Array[Byte], Double, Double)],
       dims: Int, bins: Int, maxLeaves: Int, maxDepth: Int, lambda: Double,
-      gamma: Double, minChildHess: Double): Tree = {
-    val rootAgg = data.treeAggregate((0.0, 0.0, 0L))(
-      (a, r) => (a._1 + r._2, a._2 + r._3, a._3 + 1L),
-      (a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3), depth = 2)
-    val root = new BNode(0, rootAgg._1, rootAgg._2, rootAgg._3, null)
-    root.hist = leafHistogram(data, root, root, dims, bins)
-    findBestSplit(root, dims, bins, lambda, gamma, minChildHess)
-
-    // Leaf-wise frontier: always split the best-gain leaf next. Every
-    // frontier node RETAINS its histogram until it is split (or growth
-    // stops) so a child's sibling histogram is derived by subtraction —
-    // memory is ≤ maxLeaves × dims × bins × 3 doubles (~1.5 MB at
-    // 15 × 64 × 64), driver-side only.
-    val frontier = scala.collection.mutable.PriorityQueue.empty[BNode](
-      Ordering.by(_.gain))
-    frontier += root
-    var leaves = 1
-    while (leaves < maxLeaves && frontier.nonEmpty &&
-        frontier.head.gain > 0) {
-      val node = frontier.dequeue()
-      val (gl, hl, cl) = node.splitLeft
-      val lc = new BNode(node.depth + 1, gl, hl, cl, null)
-      val rc = new BNode(node.depth + 1, node.g - gl, node.h - hl,
-        node.cnt - cl, null)
-      node.leftChild = lc; node.rightChild = rc
-      leaves += 1
-      if (leaves < maxLeaves && node.depth + 1 < maxDepth) {
-        // ONE scan for the smaller child; sibling = parent − child
-        // (LightGBM's histogram subtraction trick).
-        val (small, large) = if (cl <= node.cnt - cl) (lc, rc) else (rc, lc)
-        small.hist = leafHistogram(data, root, small, dims, bins)
-        val sib = new Array[Double](node.hist.length)
-        var i = 0
-        while (i < sib.length) {
-          sib(i) = node.hist(i) - small.hist(i); i += 1
-        }
-        large.hist = sib
-        findBestSplit(lc, dims, bins, lambda, gamma, minChildHess)
-        findBestSplit(rc, dims, bins, lambda, gamma, minChildHess)
-        frontier += lc; frontier += rc
-      }
-      node.hist = null // parent histogram consumed; free it
-    }
-    finalizeTree(root, lambda)
-  }
+      gamma: Double, minChildHess: Double): Tree =
+    fitTrees(data.map { case (b, g, h) => (b, Array(g), Array(h)) }, 1, dims,
+      bins, maxLeaves, maxDepth, lambda, gamma, minChildHess)(0)
 
   /** Flatten the finished build tree; leaves take the Newton value
     * −G/(H+λ).
@@ -528,12 +625,12 @@ object HistGbt {
       labelCol: String = "label_idx", maxIter: Int = 10, maxLeaves: Int = 15,
       maxDepth: Int = 8, maxBins: Int = 64, learningRate: Double = 0.3,
       lambda: Double = 1.0, gamma: Double = 0.0, minChildHess: Double = 1e-3,
-      sampleTarget: Int = 20000, treeParallelism: Int = 8,
+      sampleTarget: Int = 20000,
       gossTopRate: Double = 0.0, gossOtherRate: Double = 0.0,
       efbMaxConflictRate: Double = -1.0): Model =
     fitValidated(train, numClasses, featuresCol, labelCol, maxIter, maxLeaves,
       maxDepth, maxBins, learningRate, lambda, gamma, minChildHess,
-      sampleTarget, treeParallelism,
+      sampleTarget,
       gossTopRate = gossTopRate, gossOtherRate = gossOtherRate,
       efbMaxConflictRate = efbMaxConflictRate).model
 
@@ -573,7 +670,7 @@ object HistGbt {
       maxIter: Int = 10, maxLeaves: Int = 15,
       maxDepth: Int = 8, maxBins: Int = 64, learningRate: Double = 0.3,
       lambda: Double = 1.0, gamma: Double = 0.0, minChildHess: Double = 1e-3,
-      sampleTarget: Int = 20000, treeParallelism: Int = 8,
+      sampleTarget: Int = 20000,
       validation: Option[DataFrame] = None,
       earlyStoppingRounds: Int = 0,
       trackTrainingDeviance: Boolean = false,
@@ -595,11 +692,14 @@ object HistGbt {
     val raw = train.select(col(featuresCol), col(labelCol).cast("int"))
       .rdd.map(r => (r.getAs[MlVector](0), r.getInt(1)))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val dims = raw.first()._1.size
+    // label counts first: the priors need them and their total sizes
+    // the bin-mapper sample (no separate count job)
+    val counts = raw.map(_._2).countByValue()
 
     // 1. bin mapper from a bounded sample, broadcast once; the SAME
     //    sample feeds the EFB conflict graph when bundling is on
-    val sample = boundedSample(raw.map(_._1), sampleTarget)
+    val sample = boundedSample(raw.map(_._1), counts.values.sum, sampleTarget)
+    val dims = sample.head.size
     val edges = edgesFromSample(sample, dims, maxBins)
     val bundles: Option[Array[Array[Int]]] =
       if (efbMaxConflictRate >= 0.0)
@@ -620,23 +720,23 @@ object HistGbt {
     val bBundles: Broadcast[Option[Array[Array[Int]]]] = sc.broadcast(bundles)
 
     // 2. binned matrix + label, built once; scores start at log priors
-    val counts = raw.map(_._2).countByValue()
     val total = counts.values.sum.toDouble + numClasses
     val priors = Array.tabulate(numClasses)(k =>
       math.log((counts.getOrElse(k, 0L) + 1L) / total))
     val bPriors = sc.broadcast(priors)
 
     // Scale-adaptive fit partitioning (round 22, guide §2): every
-    // round launches numClasses concurrent [[fitTree]]s, each a chain
-    // of per-leaf-expansion treeAggregate jobs over the binned RDD's
-    // partitioning — at ~4k rows/partition the per-task histogram
-    // work dominates; below it the scheduler does (tiny tasks x
-    // hundreds of jobs). Derived from the label count the priors
-    // already paid for, never widening the input: a fixture-sized
-    // train collapses to 1 partition, a 100 TB train keeps its scan
-    // partitioning untouched. GOSS coins and bin-mapper samples are
-    // content-keyed (see the GOSS note below), so the fit's sampling
-    // decisions are partitioning-invariant by construction.
+    // round's [[fitTrees]] runs one treeAggregate job per lockstep step
+    // (a handful per round, whatever K) over the binned RDD's
+    // partitioning, each task histogramming every class tree's
+    // expanding leaf — at ~4k rows/partition that per-task work
+    // dominates; below it the per-task scheduler cost does. Derived
+    // from the label count the priors already paid for, never widening
+    // the input: a fixture-sized train collapses to 1 partition, a
+    // 100 TB train keeps its scan partitioning untouched. GOSS coins
+    // and bin-mapper samples are content-keyed (see the GOSS note
+    // below), so the fit's sampling decisions are
+    // partitioning-invariant by construction.
     val fitParts = math.max(1L, math.min(raw.getNumPartitions.toLong,
       math.ceil(counts.values.sum / 4096.0).toLong)).toInt
 
@@ -690,8 +790,6 @@ object HistGbt {
         -(s(y) - mx - math.log(z))
       }.mean()
 
-    val pool = Executors.newFixedThreadPool(math.max(1, treeParallelism))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     try {
       val rounds = Vector.newBuilder[Array[Tree]]
       val valDevs = Vector.newBuilder[Double]
@@ -787,19 +885,14 @@ object HistGbt {
             }
           }.persist(StorageLevel.MEMORY_AND_DISK)
         }
-        // unpersist in a finally: a tree-fit failure mid-round must not
-        // pin the materialized (bins, grad, hess) blocks for the rest
-        // of the process (the round-3 leaked-persist class)
+        // the first step's scan materializes the persisted blocks every
+        // later step reads; unpersist in a finally: a tree-fit failure
+        // mid-round must not pin the materialized (bins, grad, hess)
+        // blocks for the rest of the process (the round-3 leaked-persist
+        // class)
         val trees = try {
-          fitBase.count() // materialize once; K tree fits share it
-          val fits = (0 until numClasses).map { k =>
-            Future {
-              fitTree(fitBase.map { case (b, g, h) => (b, g(k), h(k)) },
-                treeDims, bins, maxLeaves, maxDepth, lambda, gamma,
-                minChildHess)
-            }
-          }
-          Await.result(Future.sequence(fits), Duration.Inf).toArray
+          fitTrees(fitBase, numClasses, treeDims, bins, maxLeaves, maxDepth,
+            lambda, gamma, minChildHess)
         } finally {
           if (fitBase ne withGH) fitBase.unpersist(false)
           withGH.unpersist(false)
@@ -831,9 +924,13 @@ object HistGbt {
           } catch { case e: Throwable => next.unpersist(false); throw e }
           next
         }
-        val prev = scored
-        scored = advance(prev)
-        prev.unpersist(false)
+        // the training scores are read only by a later round and by
+        // the training-deviance trajectory
+        if (m + 1 < maxIter || trackTrainingDeviance) {
+          val prev = scored
+          scored = advance(prev)
+          prev.unpersist(false)
+        }
         scoredVal.foreach { sv =>
           scoredVal = Some(advance(sv))
           sv.unpersist(false)
@@ -860,7 +957,6 @@ object HistGbt {
         if (scoredVal.isDefined) bestIter else all.length,
         trainDevs.result())
     } finally {
-      pool.shutdown()
       scored.unpersist(false)
       scoredVal.foreach(_.unpersist(false))
     }
@@ -1009,7 +1105,7 @@ object HistGbt {
     // HistGbtSpec pins the incremental values to fresh deviance() runs
     val res = fitValidated(train, numClasses = 10, maxIter = 5,
       maxLeaves = 8, maxDepth = 3, maxBins = 32, sampleTarget = 5000,
-      treeParallelism = 10, trackTrainingDeviance = true)
+      trackTrainingDeviance = true)
     val model = res.model
     val nTest = test.count().toDouble
     val acc = model.transform(test)
@@ -1046,7 +1142,7 @@ object HistGbt {
     // incremental train-deviance trajectory, the q105 discipline
     val res = fitValidated(train, numClasses = 10, maxIter = 5,
       maxLeaves = 8, maxDepth = 3, maxBins = 32, sampleTarget = 5000,
-      treeParallelism = 10, trackTrainingDeviance = true)
+      trackTrainingDeviance = true)
     val model = res.model
     val nTest = test.count().toDouble
     val acc = model.transform(test)
@@ -1086,7 +1182,7 @@ object HistGbt {
     val (train, test) = graft.util.Sampling.split8515(data, 42L)
     val res = fitValidated(train, numClasses = 10, maxIter = 5,
       maxLeaves = 8, maxDepth = 3, maxBins = 32, sampleTarget = 5000,
-      treeParallelism = 10, trackTrainingDeviance = true,
+      trackTrainingDeviance = true,
       gossTopRate = 0.2, gossOtherRate = 0.1, efbMaxConflictRate = 0.05)
     val model = res.model
     val nTest = test.count().toDouble

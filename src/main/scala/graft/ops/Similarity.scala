@@ -2469,7 +2469,7 @@ object Similarity {
   /** (dl, dfTbl, stats) for a tf index — memoized iff `tf` is a
     * [[bm25TfCache]]-owned instance (see [[bm25StatsCache]]).
     */
-  private def bm25DerivedStats(tf: DataFrame)
+  private[graft] def bm25DerivedStats(tf: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
     import tf.sparkSession.implicits._
     def build(): (DataFrame, DataFrame, DataFrame) = {

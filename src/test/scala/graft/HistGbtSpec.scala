@@ -139,6 +139,70 @@ class HistGbtSpec extends graft.SparkTestBase {
     }
   }
 
+  private def treeBits(t: HistGbt.Tree) =
+    (t.feature.toSeq, t.threshold.toSeq, t.left.toSeq, t.right.toSeq,
+      t.value.map(java.lang.Double.doubleToRawLongBits).toSeq,
+      t.gain.map(java.lang.Double.doubleToRawLongBits).toSeq)
+
+  /** q111's noisy fixture binned the way a fit bins it (64 dims, 32
+    * bins), each row carrying softmax (grad, hess) for all ten classes
+    * from seeded random scores, in `parts` partitions.
+    */
+  private def noisyBinned(parts: Int) = {
+    val rows = EmnistFixture.noisyTenClassFrame(spark).collect().map(r =>
+      (r.getAs[org.apache.spark.ml.linalg.Vector](1), r.getDouble(0).toInt))
+    val edges = HistGbt.edgesFromSample(rows.map(_._1), 64, 32)
+    val rnd = new scala.util.Random(11)
+    val binned = rows.map { case (v, y) =>
+      val s = Array.fill(10)(rnd.nextGaussian())
+      val ex = s.map(x => math.exp(x - s.max))
+      val p = ex.map(_ / ex.sum)
+      (HistGbt.encode(v, edges, None),
+        Array.tabulate(10)(k => p(k) - (if (k == y) 1.0 else 0.0)),
+        p.map(q => math.max(q * (1.0 - q), 1e-16)))
+    }
+    spark.sparkContext.parallelize(binned.toSeq, parts)
+  }
+
+  test("lockstep fit: every class tree is bit-identical to a lone fitTree " +
+      "on its slice, at 1 and 2 partitions and under step grouping") {
+    // ≥3 partitions would merge task results in completion order (the
+    // treeAggregate final fold), which no fit is bit-stable under
+    for (parts <- Seq(1, 2); (maxLeaves, maxDepth) <- Seq((8, 3), (15, 6))) {
+      val data = noisyBinned(parts).cache()
+      def lockstep(stepBytes: Long) = HistGbt.fitTrees(data, 10, 64, 32,
+        maxLeaves, maxDepth, 1.0, 0.0, 1e-3, stepBytes)
+      val oneJob = lockstep(32L << 20)
+      // a cap of three trees' slots: each step runs as ⌈active/3⌉ jobs
+      val grouped = lockstep(3L * 8 * (64 * 32 * 3 + 3))
+      (0 until 10).foreach { k =>
+        val alone = HistGbt.fitTree(data.map { case (b, g, h) => (b, g(k), h(k)) },
+          64, 32, maxLeaves, maxDepth, 1.0, 0.0, 1e-3)
+        val where = s"class $k, $parts partitions, $maxLeaves/$maxDepth"
+        assert(treeBits(oneJob(k)) === treeBits(alone), where)
+        assert(treeBits(grouped(k)) === treeBits(alone), where)
+      }
+      assert(oneJob.exists(_.numLeaves > 4), "the trees must actually grow")
+      data.unpersist(false)
+    }
+  }
+
+  test("fitValidated is repeatable: two fits on one cached 2-partition " +
+      "input give identical models") {
+    val (train, _) = graft.util.Sampling.split8515(
+      EmnistFixture.noisyTenClassFrame(spark), 42L)
+    val input = train.repartition(2).cache()
+    input.count()
+    def fit() = HistGbt.fitValidated(input, numClasses = 10, maxIter = 3,
+      maxLeaves = 8, maxDepth = 3, maxBins = 32, sampleTarget = 5000).model
+    val (a, b) = (fit(), fit())
+    assert(a.priors.map(java.lang.Double.doubleToRawLongBits).toSeq ===
+      b.priors.map(java.lang.Double.doubleToRawLongBits).toSeq)
+    assert(a.binEdges.map(_.toSeq).toSeq === b.binEdges.map(_.toSeq).toSeq)
+    assert(a.rounds.flatten.map(treeBits) === b.rounds.flatten.map(treeBits))
+    input.unpersist(false)
+  }
+
   private lazy val tenClass = EmnistFixture.tenClassFrame(spark).cache()
 
   test("q105: histogram Newton boosting clears every oracle boolean") {

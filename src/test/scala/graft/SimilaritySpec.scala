@@ -1052,6 +1052,33 @@ class SimilaritySpec extends SparkTestBase {
       s"dfCap must drop the common-term candidates: ${capped.mkString(",")}")
   }
 
+  test("bm25 derived stats: a cached index's memoized dl/df/stats equal " +
+      "a fresh build on the same tf") {
+    val docs = Seq(
+      (1L, "alpha beta gamma zebra"),
+      (2L, "alpha beta quokka quokka"),
+      (3L, "beta gamma wombat wombat wombat"),
+      (4L, "alpha"))
+      .toDF("doc_id", "text")
+    val tf = ops.Similarity.bm25TermFreqsCached(docs, "spec-bm25-derived")
+    val memo = ops.Similarity.bm25DerivedStats(tf)
+    assert(ops.Similarity.bm25DerivedStats(tf) eq memo,
+      "a cache-owned tf must be served its memoized stats")
+    // a second frame object over the same plan is not cache-owned, so
+    // it takes the fresh-build path, and is never memoized
+    val oneShot = tf.toDF()
+    assert(oneShot ne tf)
+    val fresh = ops.Similarity.bm25DerivedStats(oneShot)
+    assert(ops.Similarity.bm25DerivedStats(oneShot) ne fresh)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    Seq(memo._1 -> fresh._1, memo._2 -> fresh._2, memo._3 -> fresh._3)
+      .foreach { case (a, b) =>
+        assert(a.schema === b.schema)
+        assert(rows(a) === rows(b))
+      }
+  }
+
   test("bm25 index round trip: persisted index serves queries exactly " +
       "like the fresh build; truncated index fails loudly") {
     val docs = ops.Sources.documents(spark, "/root/testdata/sf0.001")

@@ -43,6 +43,19 @@ class TpeSpec extends AnyFunSuite {
     assert(a !== c, "different seeds should explore differently")
   }
 
+  test("M6 parallel startup returns the sequential path's trial vector") {
+    // startup draws consume only the RNG, so evaluating them as
+    // overlapping jobs must not change a single trial — including when
+    // the budget ends inside the startup phase
+    for ((trials, startup) <- Seq((20, 8), (5, 8), (12, 1))) {
+      val sequential = Tpe.minimize(space2d, bowl2d, maxTrials = trials,
+        nStartup = startup, seed = 11L)
+      val parallel = Tpe.minimize(space2d, bowl2d, maxTrials = trials,
+        nStartup = startup, seed = 11L, parallelStartup = true)
+      assert(parallel === sequential, s"maxTrials=$trials nStartup=$startup")
+    }
+  }
+
   test("M6 every proposal respects its box; int dims stay integral") {
     val space = Seq(UniformDim("u", -2, 3), IntDim("i", 2, 9),
       LogUniformDim("g", 1e-4, 10.0))
