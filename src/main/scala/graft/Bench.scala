@@ -1,43 +1,18 @@
 package graft
 import scala.util.control.NonFatal
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Default to the real core count: a hardcoded local[32] oversubscribes
-    // smaller machines and silently changes shuffle partitioning.
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // Same session posture as Verify: every query benches under the
-      // graft extensions, so band joins get the rewritten plan and the
-      // other queries carry the (measured-nil) rule-matching overhead.
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      // Bench measures q32's NB+RF arms only: the OvR-GBT arm is
-      // ~#classes × their combined cost on a scale-factor-independent
-      // fixture — it dominated the suite (19% of round-9 total) and
-      // its host wobble was the largest noise term. Verify and the
-      // test suite always run all three arms.
-      .config("spark.graft.bench.skipOvrGbt", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Bench measures q32's NB+RF arms only: the OvR-GBT arm is
+    // ~#classes × their combined cost on a scale-factor-independent
+    // fixture — it dominated the suite (19% of round-9 total) and its
+    // host wobble was the largest noise term. Verify and the test suite
+    // always run all three arms.
+    val spark = HarnessSession.create("spark.graft.bench.skipOvrGbt" -> "true")
     val failed = scala.collection.mutable.ArrayBuffer[String]()
     // SPARK_GRAFT_ONLY=q32_ml_metrics,q43_dedup_clusters benches a subset
     // during local iteration; unset (the driver's mode) runs everything.
-    // Unknown names fail fast — a typo would otherwise bench nothing and
-    // still print a well-formed success JSON.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.mkString(", ")}")
-    }
+    val only = HarnessSession.onlyQueries()
     // Alphabetical execution order: SparkEntry.queries is a hash Map, so
     // its iteration order RESHUFFLES whenever a query is added — between
     // rounds 7 and 8 that silently moved session-warmup costs onto

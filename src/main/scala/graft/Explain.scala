@@ -1,31 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump `.explain("formatted")` for named registered queries (the
   * plans/rNN before/after evidence files). Args: <sfDir> <outDir>
-  * <suffix> <q1,q2,...>. Session posture matches Bench (same
-  * extensions, shuffle partitions, UTC) so the dumped plan is the
-  * plan the bench times. Queries whose construction runs eager work
-  * (ML fits, index writes) execute that work before the final frame's
-  * plan is printed — the dump is still the declared query's plan.
+  * <suffix> <q1,q2,...>. The session is Bench's ([[HarnessSession]])
+  * so the dumped plan is the plan the bench times. Queries whose
+  * construction runs eager work (ML fits, index writes) execute that
+  * work before the final frame's plan is printed — the dump is still
+  * the declared query's plan.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     require(args.length == 4,
       "usage: Explain <sfDir> <outDir> <suffix> <q1,q2,...>")
     val Array(sfDir, outDir, suffix, names) = args
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HarnessSession.create()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (name <- names.split(",").map(_.trim).filter(_.nonEmpty)) {
       val fn = SparkEntry.queries.getOrElse(name,

@@ -1,40 +1,19 @@
 package graft
 import scala.util.control.NonFatal
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    // Same default as Bench: hardcoding 32 oversubscribes smaller
-    // machines and silently runs correctness under a different
-    // partitioning than the bench.
-    val cpus = sys.env.getOrElse(
-      "SPARK_GRAFT_CPUS", Runtime.getRuntime.availableProcessors.toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // The engine's honest posture: every query runs under the graft
-      // extensions (BandJoinToBinned + SQL functions), which also
-      // verifies the rule is semantics-preserving or a no-op on every
-      // oracled plan, not just the band-join queries.
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Bench's session posture: the graft extensions on every query also
+    // verify the rule is semantics-preserving or a no-op on every
+    // oracled plan, not just the band-join queries.
+    val spark = HarnessSession.create()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q137_doremi_mixture,… verifies a subset (dev
     // loop, mirrors Bench); the driver runs without it — full suite.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty,
-        s"SPARK_GRAFT_ONLY names not in SparkEntry.queries: ${unknown.mkString(", ")}")
-    }
+    val only = HarnessSession.onlyQueries()
     val selected = SparkEntry.queries.filter { case (n, _) =>
       only.forall(_.contains(n))
     }

@@ -49,15 +49,6 @@ object EmnistPipeline {
     featureStages(k) :+ new NaiveBayes().setModelType("gaussian")
       .setFeaturesCol("pca").setLabelCol("label_idx"))
 
-  /** M5 — multiclass random forest on PCA features (the reference's
-    * LightGBM max_depth=8 analogue; see scaladoc above).
-    */
-  def rfPipeline(k: Int, numTrees: Int = 20, maxDepth: Int = 8, seed: Long = 42L): Pipeline =
-    new Pipeline().setStages(
-      featureStages(k) :+ new RandomForestClassifier()
-        .setFeaturesCol("pca").setLabelCol("label_idx")
-        .setNumTrees(numTrees).setMaxDepth(maxDepth).setSeed(seed))
-
   /** M5 (true boosting) — One-vs-Rest over binary GBTs: the faithful
     * gradient-boosting option for the 39-class problem, at #classes ×
     * training cost (documented SURVEY §2.8 trade-off; RF is the default).

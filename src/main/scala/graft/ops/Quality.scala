@@ -93,36 +93,21 @@ object Quality {
           .as("bits_per_transition"))
   }
 
-  /** Process-lifetime [[CharLm]] broadcast memo — the round-21 advice
-    * noted [[lmScore]] created a NEW SparkContext broadcast per call
-    * and never destroyed it (bounded only by the external
-    * BlockHygiene-style sweep). The memo applies the
-    * [[graft.ops.SuffixDedup.gramClassesCached]] index-state
-    * discipline instead: the model is fitted and broadcast ONCE per
-    * (session, reference dataset) — keyed by the reference plan's
-    * semanticHash, so a different reference frame fits its own model —
-    * and every later call reuses it. Broadcast accumulation is now
-    * BOUNDED (one per distinct reference per session, each ≤ the
-    * alphabet-bounded model size) instead of one per call; entries
-    * from stopped sessions are replaced on a freshness check, never
-    * served.
+  /** [[CharLm]] broadcast memo ([[graft.util.IndexMemo]]) — the
+    * round-21 advice noted [[lmScore]] created a NEW SparkContext
+    * broadcast per call and never destroyed it. The model is now fitted
+    * and broadcast once per reference dataset per session, so broadcast
+    * accumulation is bounded by the distinct references. [[charLm]] is
+    * a deterministic count aggregate, so a hit scores identically.
     */
-  private val charLmCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.broadcast.Broadcast[CharLm]]()
+  private val charLmMemo =
+    new graft.util.IndexMemo[org.apache.spark.broadcast.Broadcast[CharLm]]
 
-  private def charLmBroadcastCached(reference: DataFrame)
-      : org.apache.spark.broadcast.Broadcast[CharLm] = {
-    val spark = reference.sparkSession
-    val key = s"${System.identityHashCode(spark)}#" +
-      s"${reference.queryExecution.analyzed.semanticHash()}"
-    def fresh(b: org.apache.spark.broadcast.Broadcast[CharLm]) =
-      b != null && !spark.sparkContext.isStopped &&
-        (try { b.value != null } catch { case _: Throwable => false })
-    val cur = charLmCache.get(key)
-    if (fresh(cur)) cur
-    else charLmCache.compute(key, (_, c) =>
-      if (fresh(c)) c else spark.sparkContext.broadcast(charLm(reference)))
-  }
+  private[graft] def charLmBroadcastCached(reference: DataFrame)
+      : org.apache.spark.broadcast.Broadcast[CharLm] =
+    charLmMemo(Seq(reference), "charLm") {
+      reference.sparkSession.sparkContext.broadcast(charLm(reference))
+    }
 
   /** [[lmScore]]'s model COLLECTED to a broadcast-friendly primitive
     * form — legitimate precisely because the model is ALPHABET-bounded

@@ -65,29 +65,21 @@ object Similarity {
     (vecs, km.fit(vecs))
   }
 
-  /** Process-lifetime IVF index cache — at 100 TB (and at any scale) an
-    * ANN index is built ONCE per (dataset, nLists, seed) and shared by
-    * every query; refitting the coarse quantizer inside each query call
-    * charges index-build cost to lookups (the round-12 bench's ANN
-    * family paid a full KMeans fit 5×). Keyed by (session identity,
-    * caller-supplied dataset key, nLists); the seed is fixed at 42 by
-    * [[unitQuantized]], so results are bit-identical to the uncached
-    * path — KMeans under a fixed seed on the same data is
-    * deterministic. The quantized frame is frozen with an eager
-    * localCheckpoint (lineage-free, a few MB per fixture), the
-    * builder's temporary persist released immediately; cached entries
-    * live for the process — a BOUNDED set (one per dataset variant),
-    * unlike the round-3 per-query persist leaks.
+  /** IVF index memo ([[graft.util.IndexMemo]]) — the round-12 bench's
+    * ANN family paid a full KMeans fit 5×. The seed is fixed at 42 by
+    * [[unitQuantized]] and KMeans under a fixed seed on the same data
+    * is deterministic, so a hit is bit-identical to the uncached path.
+    * The quantized frame is an eager localCheckpoint (a few MB per
+    * fixture); the builder's temporary persist is released at once.
     */
-  private val ivfCache = new java.util.concurrent.ConcurrentHashMap[
-    String, (DataFrame, org.apache.spark.ml.clustering.KMeansModel)]()
+  private val ivfMemo =
+    new graft.util.IndexMemo[(DataFrame, org.apache.spark.ml.clustering.KMeansModel)]
 
-  /** [[marginMineBlocked]]'s quantizer cache — driver-side KMeansModels
-    * only (bounded: one per named (src, tgt, nLists) triple), see the
-    * cacheKey arm there for the determinism argument.
+  /** [[marginMineBlocked]]'s quantizer memo — driver-side KMeansModels
+    * only; see the cacheKey arm there for the determinism argument.
     */
-  private val marginKmCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.ml.clustering.KMeansModel]()
+  private val marginKmMemo =
+    new graft.util.IndexMemo[org.apache.spark.ml.clustering.KMeansModel]
 
   /** Test-only observability: quantizer fits actually executed by
     * [[marginMineBlocked]] in this process — the cache-hit spec asserts
@@ -97,31 +89,13 @@ object Similarity {
     new java.util.concurrent.atomic.AtomicLong(0L)
 
   private def unitQuantizedCached(emb: DataFrame, cacheKey: String,
-      nLists: Int): (DataFrame, org.apache.spark.ml.clustering.KMeansModel) = {
-    // Stale hits must be replaced: the identityHashCode key is not
-    // unique across session lifetimes, and a checkpointed frame whose
-    // session has stopped would fail every query served from it. The
-    // freshness check runs on a LOCK-FREE get() first — compute()
-    // locks the bin even on a present key, and its remapping function
-    // (a full KMeans fit here) must not run under the bin lock for
-    // unrelated hits hashing to the same bin.
-    val key = s"${System.identityHashCode(emb.sparkSession)}#$cacheKey#$nLists"
-    def fresh(e: (DataFrame, org.apache.spark.ml.clustering.KMeansModel)) =
-      e != null && (e._1.sparkSession eq emb.sparkSession) &&
-        !e._1.sparkSession.sparkContext.isStopped
-    val cur = ivfCache.get(key)
-    if (fresh(cur)) cur
-    else ivfCache.compute(key, (_, c) =>
-      if (fresh(c)) c
-      else {
-        val (vecs, model) = unitQuantized(emb, nLists)
-        // pinned: BlockHygiene.sweep must never release a cached
-        // lineage-truncated checkpoint — it cannot be recomputed
-        val frozen = graft.util.BlockHygiene.pin(vecs.localCheckpoint(true))
-        vecs.unpersist(false)
-        (frozen, model)
-      })
-  }
+      nLists: Int): (DataFrame, org.apache.spark.ml.clustering.KMeansModel) =
+    ivfMemo(Seq(emb), cacheKey, nLists) {
+      val (vecs, model) = unitQuantized(emb, nLists)
+      val frozen = graft.util.BlockHygiene.pin(vecs.localCheckpoint(true))
+      vecs.unpersist(false)
+      (frozen, model)
+    }
 
   /** L2-normalize an MLlib vector (zero vector passes through) — the
     * shared unit-sphere projection for the LSH cosine paths (q26, q40).
@@ -547,34 +521,20 @@ object Similarity {
     minhashNearDupCached(Sources.documents(spark, dir), s"$dir#docs",
       maxJaccardDist = 0.4)
 
-  /** Process-lifetime MinHash-candidate memo (round 22) — q25 ships
+  /** MinHash-candidate memo ([[graft.util.IndexMemo]]) — q25 ships
     * the candidate pair list and q103 measures its recall against the
     * exact truth pairs: both run the IDENTICAL
-    * `minhashNearDup(documents, 0.4)` build, so the second consumer
-    * was paying the full tokenize→shingle→TF→minhash→self-join
-    * pipeline for a frame the session already owns.
-    * [[minhashNearDup]] is deterministic under its fixed seed (the
-    * q103 scaladoc's premise), so a hit is value-identical. Same
-    * key/freshness/pinning contract as [[ngramJaccardPairsCached]].
+    * `minhashNearDup(documents, 0.4)` build. [[minhashNearDup]] is
+    * deterministic under its fixed seed (the q103 scaladoc's premise),
+    * so a hit is value-identical.
     */
-  private val minhashPairCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val minhashPairMemo = new graft.util.IndexMemo[DataFrame]
 
   def minhashNearDupCached(docs: DataFrame, cacheKey: String,
-      maxJaccardDist: Double, numTables: Int = 8): DataFrame = {
-    val key = s"${System.identityHashCode(docs.sparkSession)}#$cacheKey#" +
-      s"$maxJaccardDist#$numTables#" +
-      s"${docs.queryExecution.analyzed.semanticHash()}"
-    def fresh(e: DataFrame) =
-      e != null && (e.sparkSession eq docs.sparkSession) &&
-        !e.sparkSession.sparkContext.isStopped
-    val cur = minhashPairCache.get(key)
-    if (fresh(cur)) cur
-    else minhashPairCache.compute(key, (_, c) =>
-      if (fresh(c)) c
-      else graft.util.BlockHygiene.pin(
-        minhashNearDup(docs, maxJaccardDist, numTables)))
-  }
+      maxJaccardDist: Double, numTables: Int = 8): DataFrame =
+    minhashPairMemo(Seq(docs), cacheKey, maxJaccardDist, numTables) {
+      graft.util.BlockHygiene.pin(minhashNearDup(docs, maxJaccardDist, numTables))
+    }
 
   /** [[q25NearDup]] core, parameterized on the input frame and the
     * distance gate. The hashed frame is persisted only for the duration
@@ -754,15 +714,12 @@ object Similarity {
   def q39NgramJaccard(spark: SparkSession, dir: String): DataFrame =
     ngramJaccardPairsCached(Sources.documents(spark, dir), s"$dir#docs")
 
-  /** Process-lifetime exact-pair memo (round 22) — the shared
+  /** Exact-pair memo ([[graft.util.IndexMemo]]) — the shared
     * upstream of the whole near-dup family: q39 ships the pair list,
     * q64 joins it with sources, [[nearDupClustersCached]] builds the
     * cluster table from it, and [[contrastivePairs]] consumes the
-    * sub-threshold band. One posting-list pass per (session, dataset
-    * key, dfCap, n) instead of one per consumer; deterministic output
-    * (exhaustive above-threshold pairs, sorted), so a hit is
-    * value-identical. Same key/freshness/pinning contract as
-    * [[bm25TermFreqsCached]].
+    * sub-threshold band. Deterministic output (exhaustive
+    * above-threshold pairs, sorted), so a hit is value-identical.
     *
     * The memoized build runs at [[PairBandFloor]] (the LOWEST
     * threshold any consumer states — contrastivePairs' 0.02 negative
@@ -774,8 +731,7 @@ object Similarity {
     * (doc_a, doc_b) sort survives the per-partition filter of the
     * materialized checkpoint unchanged.
     */
-  private val jaccardPairCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val jaccardPairMemo = new graft.util.IndexMemo[DataFrame]
 
   /** Lowest pair threshold any memo consumer requests; the shared
     * build's gate. Requests below the floor build their own entry
@@ -788,18 +744,10 @@ object Similarity {
       keepRaw: Boolean = false): DataFrame = {
     import docs.sparkSession.implicits._
     val floor = math.min(minJaccard, PairBandFloor)
-    val key = s"${System.identityHashCode(docs.sparkSession)}#$cacheKey#" +
-      s"$dfCap#$n#$floor#${docs.queryExecution.analyzed.semanticHash()}"
-    def fresh(e: DataFrame) =
-      e != null && (e.sparkSession eq docs.sparkSession) &&
-        !e.sparkSession.sparkContext.isStopped
-    val cur = jaccardPairCache.get(key)
-    val base =
-      if (fresh(cur)) cur
-      else jaccardPairCache.compute(key, (_, c) =>
-        if (fresh(c)) c
-        else graft.util.BlockHygiene.pin(
-          ngramJaccardPairs(docs, dfCap, n, floor, keepRaw = true)))
+    val base = jaccardPairMemo(Seq(docs), cacheKey, dfCap, n, floor) {
+      graft.util.BlockHygiene.pin(
+        ngramJaccardPairs(docs, dfCap, n, floor, keepRaw = true))
+    }
     val banded =
       if (minJaccard > floor) base.filter($"jacc_raw" >= minJaccard)
       else base
@@ -1020,41 +968,24 @@ object Similarity {
       .select($"doc_id")
   }
 
-  /** Process-lifetime near-dup cluster memo (round 22) — the
-    * [[SuffixDedup.gramClassesCached]] discipline applied to the
-    * OTHER dedup-index state the capstones share: the exact-Jaccard
-    * cluster table of a named corpus is computed ONCE per (session,
-    * dataset key, dfCap) and shared by every admission pipeline that
-    * folds near-dup survivorship in as a gate (q117/q129/q170 each
-    * rebuilt the identical posting lists + CC loop — index-build cost
-    * charged to every lookup). The assignment is deterministic
-    * (min-id survivor over exhaustive above-threshold pairs), so a
-    * memo hit is bit-identical to a fresh build; the frame's
-    * canonicalized-plan hash folds into the key so a filtered/derived
-    * frame passed under an existing name misses and builds its own
-    * (the gramClassesCached contract). Entries are lineage-free
-    * pinned checkpoints, one bounded row set (≤ one per member doc)
-    * per named dataset.
+  /** Near-dup cluster memo ([[graft.util.IndexMemo]]) — the
+    * exact-Jaccard cluster table every admission pipeline that folds
+    * near-dup survivorship in as a gate shares (q117/q129/q170 each
+    * rebuilt the identical posting lists + CC loop). The assignment is
+    * deterministic (min-id survivor over exhaustive above-threshold
+    * pairs), so a hit is bit-identical to a fresh build. Builds through
+    * [[ngramJaccardPairsCached]]'s memo.
     */
-  private val nearDupClusterCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val nearDupClusterMemo = new graft.util.IndexMemo[DataFrame]
 
   def nearDupClustersCached(docs: DataFrame, cacheKey: String,
-      dfCap: Int = 100): DataFrame = {
-    val key = s"${System.identityHashCode(docs.sparkSession)}#$cacheKey#" +
-      s"$dfCap#${docs.queryExecution.analyzed.semanticHash()}"
-    def fresh(e: DataFrame) =
-      e != null && (e.sparkSession eq docs.sparkSession) &&
-        !e.sparkSession.sparkContext.isStopped
-    val cur = nearDupClusterCache.get(key)
-    if (fresh(cur)) cur
-    else nearDupClusterCache.compute(key, (_, c) =>
-      if (fresh(c)) c
-      else graft.util.BlockHygiene.pin(
+      dfCap: Int = 100): DataFrame =
+    nearDupClusterMemo(Seq(docs), cacheKey, dfCap) {
+      graft.util.BlockHygiene.pin(
         connectedComponents(
           ngramJaccardPairsCached(docs, cacheKey, dfCap),
-          "doc_a", "doc_b").localCheckpoint(true)))
-  }
+          "doc_a", "doc_b").localCheckpoint(true))
+    }
 
   /** [[nearDupLosers]] over the memoized cluster table — the entry
     * point for the corpus-assembly capstones (q117/q129/q170), which
@@ -1590,7 +1521,7 @@ object Similarity {
     import spark.implicits._
     val offset = 1000000L
     val planted = d4Plant(Sources.embeddings(spark, dir), offset)
-    // fit ONCE per process (the ivfCache discipline): the clustering is
+    // fit ONCE per session (the IVF index memo): the clustering is
     // index state shared by every D4 run over the same planted corpus
     val (_, model) = unitQuantizedCached(planted, s"$dir/q202planted",
       nLists = 8)
@@ -1628,24 +1559,17 @@ object Similarity {
     * the subvector slice — `m` small distributed fits, random-init ×10
     * iterations (the [[unitQuantized]] budget rationale).
     */
-  /** [[pqFit]] behind the same process-lifetime cache discipline as
-    * [[unitQuantizedCached]]: PQ codebooks are index state, fit once per
-    * (dataset, m, k, seed) — `m` KMeans fits per QUERY was the q99 cost
-    * driver. The cached value is plain driver-side data (m·k·subDim
-    * doubles), no Spark blocks held.
+  /** [[pqFit]] behind a [[graft.util.IndexMemo]] — `m` KMeans fits per
+    * QUERY was the q99 cost driver. Each subspace fit is a fixed-seed
+    * KMeans, deterministic on the same data, so a hit is identical to a
+    * refit. The value is plain driver-side data (m·k·subDim doubles),
+    * no Spark blocks held.
     */
-  // identityHashCode keying is SAFE here, unlike ivfCache: PqIndex is
-  // plain driver-side arrays with no session affinity, and cacheKey
-  // names the dataset — a stale-session key collision can only re-serve
-  // codebooks fit on the same data under the same seed.
-  private val pqCache =
-    new java.util.concurrent.ConcurrentHashMap[String, PqIndex]()
+  private val pqMemo = new graft.util.IndexMemo[PqIndex]
 
   def pqFitCached(emb: DataFrame, cacheKey: String, m: Int = 8, k: Int = 64,
       seed: Long = 42L): PqIndex =
-    pqCache.computeIfAbsent(
-      s"${System.identityHashCode(emb.sparkSession)}#$cacheKey#$m#$k#$seed",
-      _ => pqFit(emb, m, k, seed))
+    pqMemo(Seq(emb), cacheKey, m, k, seed)(pqFit(emb, m, k, seed))
 
   def pqFit(emb: DataFrame, m: Int = 8, k: Int = 64, seed: Long = 42L): PqIndex = {
     import emb.sparkSession.implicits._
@@ -2159,7 +2083,7 @@ object Similarity {
     * its fixed seed, so its mean recall@5 against the EXACT miner on
     * the 1-in-25 anchor batch is a fixed number per dataset; the output
     * states `recall ≥ 0.5` and the oracle states `true`. Shares the
-    * process-lifetime IVF index with q45/q88 (same cacheKey/nLists).
+    * session IVF index memo with q45/q88 (same cacheKey/nLists).
     */
   def q127HardNegativeRecall(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
@@ -2393,81 +2317,50 @@ object Similarity {
       .localCheckpoint(true)
   }
 
-  /** Process-lifetime BM25 tf-index memo (round 22) — the
-    * [[nearDupClustersCached]]/gramClassesCached discipline applied to
-    * the lexical index state the retrieval family shares: the (doc,
-    * term, tf) table of a named corpus is built ONCE per (session,
-    * dataset key) and served to every consumer (q187/q188/q190/q191/
-    * q192/q199 each rebuilt it; q189/q201 rebuild the even/odd halves)
-    * instead of charging index-build cost to every query batch — the
-    * exact build-once/serve-many contract the persisted-index
-    * operators (writeBm25/loadBm25) already state. Deterministic
-    * aggregate, so a hit is value-identical to a fresh build; the
-    * frame's canonicalized-plan hash folds into the key (the
-    * gramClassesCached contract); entries are pinned lineage-free
-    * checkpoints, bounded per named dataset. Callers must NOT
+  /** BM25 tf-index memo ([[graft.util.IndexMemo]]) — the (doc, term,
+    * tf) table the retrieval family shares (q187/q188/q190/q191/q192/
+    * q199 each rebuilt it; q189/q201 rebuild the even/odd halves): the
+    * build-once/serve-many contract the persisted-index operators
+    * (writeBm25/loadBm25) already state. Deterministic aggregate, so a
+    * hit is value-identical to a fresh build. Callers must NOT
     * unpersist a cached frame (it is pinned, lineage-truncated index
     * state).
     */
-  private val bm25TfCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val bm25TfMemo = new graft.util.IndexMemo[DataFrame]
 
-  def bm25TermFreqsCached(corpus: DataFrame, cacheKey: String): DataFrame = {
-    val key = s"${System.identityHashCode(corpus.sparkSession)}#$cacheKey#" +
-      s"${corpus.queryExecution.analyzed.semanticHash()}"
-    def fresh(e: DataFrame) =
-      e != null && (e.sparkSession eq corpus.sparkSession) &&
-        !e.sparkSession.sparkContext.isStopped
-    val cur = bm25TfCache.get(key)
-    if (fresh(cur)) cur
-    else bm25TfCache.compute(key, (_, c) =>
-      if (fresh(c)) c
-      else graft.util.BlockHygiene.pin(bm25TermFreqs(corpus)))
-  }
+  def bm25TermFreqsCached(corpus: DataFrame, cacheKey: String): DataFrame =
+    bm25TfMemo(Seq(corpus), cacheKey, "word") {
+      graft.util.BlockHygiene.pin(bm25TermFreqs(corpus))
+    }
 
   /** [[bm25TermFreqsCached]] for the character-TRIGRAM index (q193's
-    * fuzzy arm) — same memo, same contract, the gram stream is
-    * [[bm25TrigramTermFreqs]]'s. Shares [[bm25TfCache]] under a
-    * `tri#`-prefixed key so the two tokenizations of one corpus can
-    * never collide.
+    * fuzzy arm): the gram stream is [[bm25TrigramTermFreqs]]'s, under
+    * a `tri` param so the two tokenizations of one corpus never
+    * collide.
     */
   def bm25TrigramTermFreqsCached(corpus: DataFrame, cacheKey: String)
-      : DataFrame = {
-    val key = s"${System.identityHashCode(corpus.sparkSession)}#tri#" +
-      s"$cacheKey#${corpus.queryExecution.analyzed.semanticHash()}"
-    def fresh(e: DataFrame) =
-      e != null && (e.sparkSession eq corpus.sparkSession) &&
-        !e.sparkSession.sparkContext.isStopped
-    val cur = bm25TfCache.get(key)
-    if (fresh(cur)) cur
-    else bm25TfCache.compute(key, (_, c) =>
-      if (fresh(c)) c
-      else graft.util.BlockHygiene.pin(bm25TrigramTermFreqs(corpus)))
-  }
+      : DataFrame =
+    bm25TfMemo(Seq(corpus), cacheKey, "tri") {
+      graft.util.BlockHygiene.pin(bm25TrigramTermFreqs(corpus))
+    }
 
-  /** Process-lifetime memo for the DERIVED BM25 scoring state — the
-    * doc-length table, the document-frequency table, and the 1-row
-    * corpus stats that [[bm25TopKFromTerms]] re-aggregates from the tf
-    * index on EVERY call (guide §2.4 "remove shuffles outright": the
-    * suite's retrieval queries score against the SAME session-cached
-    * index — q187/q190/q192/q199 once each, q191 twice — and each call
-    * re-ran the two full-index aggregates). Keyed by the tf frame's
-    * object IDENTITY and populated ONLY for frames owned by
-    * [[bm25TfCache]] (checked by reference): a cached tf is pinned,
-    * immutable, lineage-truncated index state, so its derived
-    * aggregates are a deterministic pure function of it — a hit is
-    * value-identical — and entries can never go stale (the cache never
-    * mutates a served instance; a changed corpus is a NEW instance
-    * under a new key). One-shot tf frames (a fresh build, a
-    * [[CurationIndex.loadBm25]] load) are NOT memoized: identity of a
-    * transient frame can never be seen twice, and holding it would
-    * leak pinned blocks for the session.
+  /** Memo for the DERIVED BM25 scoring state — the doc-length table,
+    * the document-frequency table, and the 1-row corpus stats that
+    * [[bm25TopKFromTerms]] re-aggregates from the tf index on EVERY
+    * call (the suite's retrieval queries score against the SAME
+    * memoized index — q187/q190/q192/q199 once each, q191 twice).
+    * Populated ONLY for tf frames [[bm25TfMemo]] holds (by reference),
+    * and named by that entry's key: a held tf is pinned, immutable
+    * index state, so its derived aggregates are a deterministic pure
+    * function of it and a hit is value-identical. One-shot tf frames
+    * (a fresh build, a [[CurationIndex.loadBm25]] load) are NOT
+    * memoized: a transient frame is never seen twice, and holding it
+    * would leak pinned blocks for the session.
     */
-  private val bm25StatsCache = new java.util.concurrent.ConcurrentHashMap[
-    DataFrame, (DataFrame, DataFrame, DataFrame)]()
+  private val bm25StatsMemo = new graft.util.IndexMemo[(DataFrame, DataFrame, DataFrame)]
 
   /** (dl, dfTbl, stats) for a tf index — memoized iff `tf` is a
-    * [[bm25TfCache]]-owned instance (see [[bm25StatsCache]]).
+    * [[bm25TfMemo]]-held instance (see [[bm25StatsMemo]]).
     */
   private[graft] def bm25DerivedStats(tf: DataFrame)
       : (DataFrame, DataFrame, DataFrame) = {
@@ -2478,13 +2371,15 @@ object Similarity {
       val dfTbl = tf.groupBy($"term").agg(count(lit(1)).as("df"))
       (dl, dfTbl, stats)
     }
-    if (!bm25TfCache.values.stream.anyMatch(_ eq tf)) build()
-    else bm25StatsCache.computeIfAbsent(tf, _ => {
-      val (dl, dfTbl, stats) = build()
-      (graft.util.BlockHygiene.pin(dl.localCheckpoint(true)),
-        graft.util.BlockHygiene.pin(dfTbl.localCheckpoint(true)),
-        graft.util.BlockHygiene.pin(stats.localCheckpoint(true)))
-    })
+    bm25TfMemo.keyOf(tf) match {
+      case None => build()
+      case Some(owner) => bm25StatsMemo(Seq(tf), owner) {
+        val (dl, dfTbl, stats) = build()
+        (graft.util.BlockHygiene.pin(dl.localCheckpoint(true)),
+          graft.util.BlockHygiene.pin(dfTbl.localCheckpoint(true)),
+          graft.util.BlockHygiene.pin(stats.localCheckpoint(true)))
+      }
+    }
   }
 
   /** The QUERY half of [[bm25TopK]]: score `queries` against an
@@ -2516,7 +2411,7 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     require(k >= 1, s"k must be >= 1: $k")
     // dl/df/corpus stats are a pure function of the tf index — served
-    // from the process-lifetime memo when tf is session-cached index
+    // from the session memo when tf is memoized index
     // state, rebuilt inline otherwise (identical aggregates either way)
     val (dl, dfTbl, stats) = bm25DerivedStats(tf)
     val qt = queryTerms.select($"query_id", $"term").distinct()
@@ -2821,7 +2716,7 @@ object Similarity {
     *
     * 100 TB posture: both arms are the production shapes (posting
     * join with broadcast query terms; cell-blocked kNN under the
-    * process-lifetime index cache); the fusion joins two
+    * session index memo); the fusion joins two
     * poolK-bounded-per-query rank tables. The handoff collect is
     * O(#probes × k) — probe sets are bounded by construction.
     */
@@ -3254,7 +3149,7 @@ object Similarity {
         .select($"mlvec")
       km.fit(fitInput)
     }
-    // Process-lifetime quantizer cache (judge round 19: the bench
+    // Session quantizer memo (judge round 19: the bench
     // repeats each heavy query 2–3×, and an un-cached arm re-paid the
     // KMeans fit — 10 iterations over a full repartition+sort of
     // src∪tgt — on every invocation; production batch-mining callers
@@ -3262,18 +3157,10 @@ object Similarity {
     // deterministic pure function of (src, tgt, nLists): content-keyed
     // layout + fixed seed ⇒ the cached model is bit-identical to a
     // refit. Only the driver-side model (nLists × dim centers) is
-    // cached — no frames, so nothing to pin. Keyed by session identity
-    // like [[unitQuantizedCached]]; callers opt in with a key naming
-    // the (src, tgt) dataset pair, same contract as the IVF cache.
-    val model = cacheKey match {
-      case None => fitQuantizer()
-      case Some(ck) =>
-        val key = s"${System.identityHashCode(src.sparkSession)}#$ck#$nLists"
-        val cur = marginKmCache.get(key)
-        if (cur != null) cur
-        else marginKmCache.compute(key, (_, c) =>
-          if (c != null) c else fitQuantizer())
-    }
+    // cached — no frames, so nothing to pin. Callers opt in with a key
+    // naming the (src, tgt) dataset pair.
+    val model = cacheKey.fold(fitQuantizer())(ck =>
+      marginKmMemo(Seq(src, tgt), ck, nLists)(fitQuantizer()))
     val sAssigned = model.transform(su)
       .select($"sid", $"sv", $"ivf_list".as("cell"))
     val tAssigned = model.transform(tu)
@@ -3413,7 +3300,7 @@ object Similarity {
     * and the negative band; components are the q43 iterated small
     * joins; everything after is per-cluster/per-anchor argmax over
     * already-thin pair lists. With `cacheKey` set, BOTH shared inputs
-    * ride the process-lifetime memos ([[ngramJaccardPairsCached]]'s
+    * ride the session memos ([[ngramJaccardPairsCached]]'s
     * band-floor build and [[nearDupClustersCached]]) instead of
     * rebuilding the posting lists and re-running the CC loop the
     * session already owns — value-identical by the memo contracts
@@ -3463,7 +3350,7 @@ object Similarity {
         $"negative_id", $"neg_jaccard")
       .localCheckpoint(true)
     // Release only privately built inputs: the memoized frames are
-    // pinned process-lifetime state shared with other consumers (pin
+    // pinned session state shared with other consumers (pin
     // shields them from sweep(), not from a direct unpersist here).
     if (cacheKey.isEmpty) {
       allPairs.unpersist(false)

@@ -39,8 +39,8 @@ import org.apache.spark.sql.functions._
   * 8-byte key width, not extra shuffles); q100 stays the cheap
   * default, this is the collision-free audit pass. Gram classes for a
   * named corpus are additionally MEMOIZED per (session, dataset dir,
-  * L) — the [[Similarity]] ivfCache discipline: dedup index state is
-  * built once per (dataset, config) and shared by every consumer.
+  * L) in a [[graft.util.IndexMemo]]: dedup index state is built once
+  * per (dataset, config) and shared by every consumer.
   * Downstream (cross-doc gate, island merge) is byte-identical to
   * q100's — the two INDEPENDENT algorithms must agree exactly, which
   * is what q107's oracle (the same SQL as q100's) checks end-to-end.
@@ -138,59 +138,21 @@ object SuffixDedup {
     out
   }
 
-  /** Process-lifetime gram-class memo — the [[Similarity]] ivfCache
-    * discipline applied to dedup index state: at 100 TB (and at any
-    * scale) the literal-equality class table of a corpus is computed
-    * ONCE per (dataset, gram length) and shared by every downstream
-    * consumer; recomputing it inside each query call charges
-    * index-build cost to lookups. Keyed by (session identity,
-    * caller-supplied dataset key, gramLen); the class assignment is
-    * deterministic (min packed id over literal-equality groups), so a
-    * memo hit is bit-identical to a fresh build. The cached frame is an
-    * eager lineage-free localCheckpoint (built by [[gramClasses]]);
-    * entries are a BOUNDED set (one per dataset variant) and stale
-    * entries from stopped sessions are replaced on a lock-free
-    * freshness check, never served.
-    *
-    * CONTRACT: `cacheKey` names the dataset, and the frame's
-    * canonicalized-plan hash is folded into the physical key — a
-    * filtered/derived frame passed under an existing name canonicalizes
-    * differently, misses, and builds its own classes rather than being
-    * served the named dataset's (the round-14 advice hole). Size
-    * note: unlike the few-MB ANN indexes, a class table is one row per
-    * corpus CHARACTER (~34 MB at sf0.1) — still one bounded entry per
-    * named dataset, but budget for it when memoizing many datasets in
-    * one process.
+  /** Gram-class memo ([[graft.util.IndexMemo]]) — the literal-equality
+    * class table of a corpus, shared by every downstream consumer. The
+    * class assignment is deterministic (min packed id over
+    * literal-equality groups), so a hit is bit-identical to a fresh
+    * [[gramClasses]] build. Size note: unlike the few-MB ANN indexes, a
+    * class table is one row per corpus CHARACTER (~34 MB at sf0.1) —
+    * budget for it when memoizing many datasets in one session.
     */
-  private val gramClassCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+  private val gramClassMemo = new graft.util.IndexMemo[DataFrame]
 
   def gramClassesCached(docs: DataFrame, cacheKey: String,
-      gramLen: Int): DataFrame = {
-    // The frame's canonicalized-plan hash is folded into the key as a
-    // cheap identity check: two constructions of the SAME dataset (the
-    // same parquet read) canonicalize identically and still share one
-    // entry, while a filtered/derived frame passed under an existing
-    // name can no longer be served that name's classes — it misses and
-    // builds its own. The named key still matters (it scopes the
-    // documented budget and lets distinct logical datasets with equal
-    // plans coexist conceptually); the hash closes the misuse hole.
-    val key = s"${System.identityHashCode(docs.sparkSession)}#$cacheKey#" +
-      s"$gramLen#${docs.queryExecution.analyzed.semanticHash()}"
-    def fresh(e: DataFrame) =
-      e != null && (e.sparkSession eq docs.sparkSession) &&
-        !e.sparkSession.sparkContext.isStopped
-    // Freshness on a LOCK-FREE get() first: compute() locks the bin even
-    // on a present key, and the remapping function (a full class build)
-    // must not run under the bin lock for unrelated hits.
-    val cur = gramClassCache.get(key)
-    if (fresh(cur)) cur
-    else gramClassCache.compute(key, (_, c) =>
-      // pinned: the memo'd frame is a lineage-truncated checkpoint —
-      // BlockHygiene.sweep must never release it (unrecoverable)
-      if (fresh(c)) c
-      else graft.util.BlockHygiene.pin(gramClasses(docs, gramLen)))
-  }
+      gramLen: Int): DataFrame =
+    gramClassMemo(Seq(docs), cacheKey, gramLen) {
+      graft.util.BlockHygiene.pin(gramClasses(docs, gramLen))
+    }
 
   /** [[gramClasses]] plus the persisted intermediate level tables the
     * plan reuses — the CALLER must unpersist them once the returned
@@ -275,9 +237,8 @@ object SuffixDedup {
     case Some(k) =>
       // Named corpus: serve the class table from the memo (built once
       // per (session, dataset, L)); only the downstream dup gate +
-      // island merge run per call. The key asserts `docs` IS that
-      // dataset — see the gramClassCache contract; pass None for any
-      // derived/filtered frame.
+      // island merge run per call (a derived/filtered frame under the
+      // same name misses: the memo key folds the frame's plan).
       SpanDedup.duplicatedIslands(
         gramClassesCached(docs, k, gramLen), gramLen, minDocs)
     case None =>

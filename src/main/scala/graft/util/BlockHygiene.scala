@@ -20,8 +20,8 @@ import org.apache.spark.sql.{Dataset, SparkSession}
   *
   * [[sweep]] makes the release deterministic: unpersist every RDD still
   * registered with the SparkContext, EXCEPT ids [[pin]]ned by the
-  * process-lifetime index caches (the IVF index cache and the dedup
-  * gram-class memo — bounded, intentionally immortal, and — being
+  * builds behind [[IndexMemo]], the owner of every pinned frame (session
+  * index state — bounded, intentionally immortal, and — being
   * lineage-truncated checkpoints — UNRECOVERABLE if swept). Harnesses
   * (Bench, Verify) call it between queries, off-timer; library users
   * with long sessions can call it at their own batch boundaries.

@@ -1,5 +1,6 @@
 package graft.util
 
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -99,7 +100,7 @@ object Bucketing {
     def build(): java.nio.file.Path = {
       val base = java.nio.file.Files.createTempDirectory("graft-q101")
       Runtime.getRuntime.addShutdownHook(new Thread(() =>
-        try deleteRecursively(base) catch { case _: Throwable => () }))
+        try deleteRecursively(base) catch { case NonFatal(_) => () }))
       writeBucketed(graft.ops.Sources.orders(spark, dir), ordersTable,
         s"$base/orders", "o_orderkey", 16)
       writeBucketed(graft.ops.Sources.lineitem(spark, dir), lineitemTable,

@@ -124,5 +124,10 @@ class PqSpec extends SparkTestBase {
     val eb = ops.Similarity.pqEncode(clustered, b)
       .orderBy($"vec_id").collect().map(_.getSeq[Int](1)).toSeq
     assert(ea === eb)
+    // the session memo serves a repeat fit the first fit's index
+    val c = ops.Similarity.pqFitCached(clustered, "spec#pq", m = 8, k = 16, seed = 9L)
+    assert(ops.Similarity.pqFitCached(clustered, "spec#pq", m = 8, k = 16, seed = 9L) eq c)
+    assert(c.codebooks.map(_.map(_.toSeq).toSeq).toSeq ===
+      a.codebooks.map(_.map(_.toSeq).toSeq).toSeq)
   }
 }

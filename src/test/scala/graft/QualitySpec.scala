@@ -53,6 +53,18 @@ class QualitySpec extends SparkTestBase {
     // scores are bits: positive, and bounded by log2 of the uniform
     // fallback's worst case (1/(V) with V <= alphabet)
     assert(got.values.forall(b => b > 0.0 && b < 16.0))
+    // the call above broadcast the model into the memo: a memo read now
+    // is served that broadcast (older than one made just before it),
+    // and a second lmScore on the same reference reuses it
+    val probe = spark.sparkContext.broadcast(0)
+    val model = ops.Quality.charLmBroadcastCached(reference)
+    assert(model.id < probe.id, "lmScore must broadcast through the memo")
+    probe.destroy()
+    val again = ops.Quality.lmScore(candidates, reference)
+      .select($"doc_id", $"bits_per_transition")
+      .as[(Long, Double)].collect().toMap
+    assert(again === got)
+    assert(ops.Quality.charLmBroadcastCached(reference) eq model)
   }
 
   test("moore-lewis: domain-affine text scores negative diff, crawl-like " +

@@ -99,5 +99,12 @@ class SuffixDedupSpec extends SparkTestBase {
     val literals = SpanDedup.grams(docs, 24)
       .agg(countDistinct(col("gram"))).head().getLong(0)
     assert(classes === literals)
+    // the session memo: a repeat call is served the first build, and
+    // that build equals the uncached classes
+    val cached = SuffixDedup.gramClassesCached(docs, "spec#classes", 24)
+    assert(SuffixDedup.gramClassesCached(docs, "spec#classes", 24) eq cached)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    assert(rows(cached) === rows(SuffixDedup.gramClasses(docs, 24)))
   }
 }
